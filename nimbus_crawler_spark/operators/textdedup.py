@@ -66,12 +66,7 @@ def _materialize(df: DataFrame) -> DataFrame:
     (8×) and the MinHash signature aggregation per self-join side (2×) — an
     8×/2× tax on the heaviest aggregation at corpus scale. ``localCheckpoint``
     materializes the (small: one row per doc) signature/fingerprint table
-    once; every consumer then plans against the stored result. Disable with
-    NIMBUS_DEDUP_MAT=0 to get the pure-lazy plan back."""
-    import os
-
-    if os.environ.get("NIMBUS_DEDUP_MAT", "1") == "0":
-        return df
+    once; every consumer then plans against the stored result."""
     return df.localCheckpoint(eager=True)
 
 

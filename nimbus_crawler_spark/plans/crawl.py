@@ -111,10 +111,17 @@ def crawl(
             # warehouse): defaulting to 0 would let run_round skip the
             # cross-round content-dedup scan on the strength of an invariant
             # ("parsed row ⇒ fetched_total > 0") the marker can't vouch for —
-            # derive the truth from state instead (one scan, resume-only)
+            # derive the truth from state instead (one scan, resume-only).
+            # Same predicate as run_round's n_fetched metric: content-dup
+            # rows (skipped with an html_key) were fetched and took a
+            # crawl_seq too — counting only parsed rows would hand those
+            # sequence numbers out again
             ft = (
                 store.read("url_state")
-                .where(F.col("status") == "parsed")
+                .where(
+                    (F.col("status") == "parsed")
+                    | ((F.col("status") == "skipped") & F.col("html_key").isNotNull())
+                )
                 .count()
             )
         fetched_total = int(ft)

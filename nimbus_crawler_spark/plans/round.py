@@ -62,17 +62,12 @@ def _backoff_rounds_expr(retry, cfg: CrawlConfig):
 
 
 def _mat(df: DataFrame) -> DataFrame:
-    """Materialization strategy for round-scoped intermediates (A/B'd on this
-    host): 'eager' localCheckpoint pays one planning pass up front and every
-    consumer then plans against a tiny LogicalRDD — measured fastest; 'lazy'
-    defers the pass; 'persist' skips lineage truncation (slowest: every
-    action re-analyzes the full tree). Env NIMBUS_ROUND_MAT overrides."""
-    import os
-
-    mode = os.environ.get("NIMBUS_ROUND_MAT", "eager")
-    if mode == "persist":
-        return df.persist()
-    return df.localCheckpoint(eager=(mode == "eager"))
+    """Materialize a round-scoped intermediate: an eager localCheckpoint pays
+    one planning pass up front and every consumer then plans against a tiny
+    LogicalRDD. Measured fastest against a lazy checkpoint and against
+    ``persist()``, which keeps the lineage, so every action re-analyzes the
+    full tree."""
+    return df.localCheckpoint(eager=True)
 
 
 def _pkey(cfg: CrawlConfig):
@@ -267,7 +262,7 @@ def run_round(
     )
 
     # --- politeness token bucket (O1/O2) ------------------------------------
-    selected_mat = politeness_select(
+    selected = politeness_select(
         gated.where(F.col("_allowed")),
         round_idx=r,
         round_ms=cfg.round_ms,
@@ -279,12 +274,7 @@ def run_round(
         # rank path shuffles, so its output is checkpointed before the four
         # consumers below (fetch broadcast, clock, failed anti-join, delta)
         materialize=_mat,
-    )
-    # keep the MATERIALIZED frame for the release loop below: unpersisting
-    # the .drop() derivative would leave the rank path's cached blocks live
-    # under NIMBUS_ROUND_MAT=persist (the fast path is a plain filter —
-    # unpersist on it is a no-op either way)
-    selected = selected_mat.drop("_allowed", "next_free_ms", "host_rank")
+    ).drop("_allowed", "next_free_ms", "host_rank")
     _tick("select")
 
     # Robots-denied rows: the verdict is already a cached column, so the
@@ -624,17 +614,11 @@ def run_round(
         merge_metrics={"url_state": metric_exprs},
         meta_fn=finalize,
     )
-    # release round-scoped storage so executor memory is per-round, not
-    # accumulating across a long crawl. NOTE: this frees blocks eagerly only
-    # under NIMBUS_ROUND_MAT=persist (unpersist drops CacheManager entries);
-    # localCheckpoint-backed frames (eager/lazy modes) hold their blocks
-    # until the checkpointed RDDs are GC'd on the driver — the ContextCleaner
-    # then drops them asynchronously, which bounds storage across a long
-    # crawl without an explicit release hook.
-    for _df in (domains_all, gated, selected_mat, ok_rows, flags, children, trimmed):
-        if _df is not None:
-            _df.unpersist()
-
+    # no explicit release of round-scoped storage: every intermediate above
+    # is a localCheckpoint (never in the CacheManager, so unpersist() would
+    # be a no-op). Its blocks live until the checkpointed RDD is GC'd on the
+    # driver, and the ContextCleaner then drops them asynchronously, which
+    # keeps executor storage per-round across a long crawl.
     _tick("commit")
 
     fm = marker["meta"]

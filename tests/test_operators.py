@@ -31,6 +31,31 @@ def _jaccard(a, b):
     return (len(a & b) / len(u)) if u else 1.0
 
 
+def _union_find(edges):
+    """Plain-Python reference for connected components: node -> minimum
+    node id of its component, for every endpoint of ``edges``."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for e in edges for x in e}
+
+
+def _round_robin(spark, edges, parts):
+    """Edges spread round-robin over ``parts`` partitions, so most
+    components span several partitions."""
+    return spark.createDataFrame(edges, "a long, b long").repartition(parts)
+
+
 class TestExactDedup:
     def test_groups(self, spark, docs):
         from nimbus_crawler_spark.operators.textdedup import exact_dedup_groups
@@ -254,6 +279,33 @@ class TestTextstats:
         df = spark.createDataFrame(rows, "doc_id long, text string")
         got = sorted(r["doc_id"] for r in curation_pipeline(df).collect())
         assert got == [0, 5]
+
+    def test_curation_evaluates_each_regex_once(self, spark):
+        """Plan-shape pin for curation's rand() Filter barrier: without it
+        Catalyst pushes the three gates through the scoring Project and
+        every regexp_extract_all of the language and quality features is
+        planned twice (once in the pushed Filter, once in the Project)."""
+        import io
+        from contextlib import redirect_stdout
+
+        from nimbus_crawler_spark.operators.textstats import (
+            _quality_feature_cols,
+            curation_pipeline,
+            lang_pred_col,
+            quality_score_col,
+        )
+
+        t = F.col("text")
+        once = sum(
+            str(c).count("regexp_extract_all")
+            for c in (lang_pred_col(t), quality_score_col(_quality_feature_cols(t)))
+        )
+        df = spark.createDataFrame([(0, "the cat sat on the mat")], "doc_id long, text string")
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            curation_pipeline(df).explain("formatted")
+        assert once > 0
+        assert buf.getvalue().count("regexp_extract_all") == once
 
 
 class TestMultimodal:
@@ -491,9 +543,10 @@ class TestConnectedComponents:
         jumping must finish inside the max_iter=10 bound (≈ log2 + slack)."""
         from nimbus_crawler_spark.operators.graph import connected_components
 
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(63)], "a long, b long"
-        )
+        # round-robin over 8 partitions: each partition holds ~8 scattered
+        # path edges, so the per-partition contraction leaves a long chain
+        # that hook+jump must close across partitions
+        edges = _round_robin(spark, [(i, i + 1) for i in range(63)], 8)
         got = {r["node"]: r["comp"] for r in connected_components(edges, max_iter=10).collect()}
         assert set(got.values()) == {0}
         assert len(got) == 64
@@ -540,7 +593,9 @@ class TestConnectedComponents:
 
         from nimbus_crawler_spark.operators.graph import connected_components
 
-        edges = spark.createDataFrame([(i, i + 1) for i in range(63)], "a long, b long")
+        # spread over partitions so the global loop has work left after the
+        # per-partition contraction (one partition would solve it outright)
+        edges = _round_robin(spark, [(i, i + 1) for i in range(63)], 8)
         with pytest.raises(RuntimeError, match="did not converge"):
             connected_components(edges, max_iter=1)
 
@@ -561,6 +616,94 @@ class TestConnectedComponents:
         plan = buf.getvalue()
         assert "Window" not in plan
         assert "HashAggregate" in plan
+
+
+class TestLocalComponentsKernel:
+    """The per-partition numpy kernel of connected_components, without Spark,
+    against the union-find reference."""
+
+    @staticmethod
+    def _check(edges):
+        import numpy as np
+
+        from nimbus_crawler_spark.operators.graph import local_components
+
+        u = np.array([a for a, _ in edges], dtype=np.int64)
+        v = np.array([b for _, b in edges], dtype=np.int64)
+        nodes, comp = local_components(u, v)
+        assert nodes.tolist() == sorted(set(u.tolist()) | set(v.tolist()))
+        assert dict(zip(nodes.tolist(), comp.tolist())) == _union_find(edges)
+
+    @pytest.mark.parametrize("seed", range(8))
+    def test_random_graphs(self, seed):
+        import random
+
+        rng = random.Random(seed)
+        n = rng.choice([3, 30, 400])
+        # sparse, shuffled ids (up to 2^62) so dense re-indexing is exercised
+        ids = rng.sample(range(2**62), n)
+        edges = [(rng.choice(ids), rng.choice(ids)) for _ in range(rng.randint(1, 2 * n))]
+        self._check(edges)
+
+    def test_self_loops_and_duplicate_edges(self):
+        self._check([(5, 5), (9, 9), (9, 9), (3, 7), (7, 3), (3, 7), (7, 1), (5, 5)])
+
+    def test_long_path_any_order(self):
+        import random
+
+        path = [(i, i + 1) for i in range(63)]
+        self._check(path)
+        rev = [(b, a) for a, b in reversed(path)]
+        self._check(rev)
+        random.Random(5).shuffle(path)
+        self._check(path)
+
+    def test_empty(self):
+        self._check([])
+
+
+class TestConnectedComponentsPartitioned:
+    """connected_components over inputs whose components span partitions,
+    so the global loop must merge what the per-partition contraction split."""
+
+    @pytest.mark.parametrize("parts", [1, 3, 8])
+    def test_round_robin_matches_union_find(self, spark, parts):
+        import random
+
+        from nimbus_crawler_spark.operators.graph import connected_components
+
+        rng = random.Random(parts)
+        edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(250)]
+        edges += [(1000 + i, 1001 + i) for i in range(40)]  # a path
+        edges += [(2000, 2000), (2001, 2001), (2001, 2002)]  # self-loops
+        df = _round_robin(spark, edges, parts)
+        assert df.rdd.getNumPartitions() == parts
+        got = {r["node"]: r["comp"] for r in connected_components(df).collect()}
+        assert got == _union_find(edges)
+
+    def test_job_count_pin(self, spark):
+        """A one-partition input is solved by the local kernel, so the
+        global loop confirms in one round: ≤ 20 Spark jobs for ~2k edges
+        (the hook+jump loop alone needs one round per halving of the
+        longest label chain, ~a dozen jobs each)."""
+        import random
+
+        from nimbus_crawler_spark.operators.graph import connected_components
+
+        rng = random.Random(7)
+        edges = [(rng.randrange(2500), rng.randrange(2500)) for _ in range(2000)]
+        df = spark.createDataFrame(edges, "a long, b long").coalesce(1)
+        sc = spark.sparkContext
+        sc.setJobGroup("cc-job-count-pin", "connected_components job count")
+        try:
+            got = {r["node"]: r["comp"] for r in connected_components(df).collect()}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert got == _union_find(edges)
+        # the collect above is one job of its own
+        jobs = sc.statusTracker().getJobIdsForGroup("cc-job-count-pin")
+        assert len(jobs) - 1 <= 20, len(jobs)
 
 
 class TestDecontaminate:
@@ -1403,20 +1546,4 @@ class TestR6OptimizationInternals:
             edges = [(a, b) for a, b in edges if a != b]
             df = spark.createDataFrame(edges, "a long, b long")
             got = {r["node"]: r["comp"] for r in connected_components(df).collect()}
-            # plain-Python union-find reference
-            parent = {}
-            def find(x):
-                parent.setdefault(x, x)
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-            for a, b in edges:
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            exp = {}
-            for a, b in edges:
-                for x in (a, b):
-                    exp[x] = find(x)
-            assert got == exp, seed
+            assert got == _union_find(edges), seed

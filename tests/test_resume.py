@@ -48,6 +48,32 @@ def test_interrupt_and_resume_equals_uninterrupted(spark, small, lossless_final,
     assert _final_state(spark, wh) == lossless_final
 
 
+def test_resume_without_fetched_total_counts_content_dups(spark, small, lossless_final, tmp_path):
+    """A marker without ``fetched_total`` (older format, externally seeded
+    warehouse) makes resume recount it from state. Content-dup rows
+    (skipped, html_key set) were fetched and hold crawl_seq values too; a
+    recount of parsed rows alone would hand those numbers out again."""
+    from pyspark.sql import functions as F
+
+    corpus, pages = small
+    cfg = CrawlConfig(round_ms=4000)
+    wh = tmp_path / "legacy"
+    crawl(spark, str(wh), pages, corpus.seeds_text, cfg, max_rounds=3)
+    state = SnapshotStore(spark, str(wh)).read("url_state")
+    assert state.where((F.col("status") == "skipped") & F.col("html_key").isNotNull()).count() > 0
+
+    marker = max((wh / "_commits").glob("c*.json"))
+    m = json.loads(marker.read_text())
+    del m["meta"]["fetched_total"]
+    marker.write_text(json.dumps(m))
+
+    crawl(spark, str(wh), pages, None, cfg, max_rounds=60, resume=True)
+    _, results, fetched_total = _final_state(spark, str(wh))
+    seqs = [s for s, _ in results]
+    assert len(seqs) == len(set(seqs)), "crawl_seq reused after resume"
+    assert (results, fetched_total) == lossless_final[1:]
+
+
 def test_uncommitted_round_data_is_ignored(spark, small, lossless_final, tmp_path):
     corpus, pages = small
     cfg = CrawlConfig(round_ms=4000)
