@@ -182,5 +182,11 @@ def bm25_topk(
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
-    w = Window.partitionBy(F.pmod(F.col("doc_id"), F.lit(1))).orderBy(F.desc("score"), F.asc("doc_id"))  # constant-0 partition (non-foldable): same single-task semantics over <=k post-limit rows, no WindowExec WARN
+    # constant-0 partition key that Catalyst cannot fold away (a bare lit(0)
+    # becomes an unpartitioned window and a WindowExec WARN): one task over
+    # the <= k post-limit rows. Hashed first, as in ranking.py, so a string
+    # or null doc_id still lands in that one partition.
+    w = Window.partitionBy(F.pmod(F.xxhash64("doc_id"), F.lit(1))).orderBy(
+        F.desc("score"), F.asc("doc_id")
+    )
     return scored.withColumn("rank", F.row_number().over(w))

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .textdedup import banded_pairs
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -145,34 +147,18 @@ def embedding_cosine_pairs(
 
     Banded sign-LSH candidate generation — band j's key is the sign pattern
     of components [j·bits, (j+1)·bits); pairs sharing ≥1 band key are
-    candidates (bucket self-join, never all-pairs: the bucket fan-out is
-    bounded by 2^bits per band) — then exact cosine verification on the
-    candidate set only. The standard random-hyperplane LSH trade: pairs whose
-    signs differ in every band are missed; recall rises with ``bands`` and
-    falls with ``bits``. All JVM-side expressions, deterministic, and the
-    oracle mirrors the banded algorithm exactly."""
-    v = embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                sign_bucket(F.col("_v"), bits, offset=j * bits).alias("bk"),
-            )
-            for j in range(bands)
-        ]
-    )
-    banded = v.select("_id", F.explode(band_structs).alias("_b")).select(
-        "_id", F.col("_b.band").alias("band"), F.col("_b.bk").alias("bk")
-    )
-    a = banded.select(F.col("_id").alias("a"), "band", "bk")
-    b = banded.select(F.col("_id").alias("b"), "band", "bk")
-    cand = a.join(b, ["band", "bk"]).where(F.col("a") < F.col("b")).select("a", "b").distinct()
-    pa = v.select(F.col("_id").alias("a"), F.col("_v").alias("_va"))
-    pb = v.select(F.col("_id").alias("b"), F.col("_v").alias("_vb"))
+    candidates (``textdedup.banded_pairs``: bucket self-join, never
+    all-pairs, each pair emitted once) — then exact cosine verification on
+    the carried vectors of the candidate set only. The standard
+    random-hyperplane LSH trade: pairs whose signs differ in every band are
+    missed; recall rises with ``bands`` and falls with ``bits``. All
+    JVM-side expressions, deterministic, and the oracle mirrors the banded
+    algorithm exactly."""
+    v = embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("vec"))
+    keys = [sign_bucket(F.col("vec"), bits, offset=j * bits) for j in range(bands)]
     return (
-        cand.join(pa, "a")
-        .join(pb, "b")
-        .withColumn("cosine", F.round(cosine(F.col("_va"), F.col("_vb")), 6))
+        banded_pairs(v, "_id", keys, carry=("vec",))
+        .withColumn("cosine", F.round(cosine(F.col("vec_a"), F.col("vec_b")), 6))
         .where(F.col("cosine") >= threshold)
         .select("a", "b", "cosine")
     )

@@ -12,11 +12,14 @@ Scale notes (the point of each design):
   the cheapest possible grouping key and AQE handles hash skew (empty docs).
 * MinHash: signatures are ``min(md5(i||':'||shingle))`` per permutation i —
   a min-aggregate per (doc, i), so map-side partial aggregation does almost
-  all the work before the shuffle. LSH banding turns all-pairs O(n²) into
-  per-bucket candidate generation; candidate verification joins are bounded
-  by bucket sizes, not corpus size.
+  all the work before the shuffle.
 * SimHash: 32-bit fingerprint via per-hex-char votes — a single groupBy(doc)
-  aggregation; Hamming-near pairs then join on band keys, never all-pairs.
+  aggregation; Hamming-near pairs are then verified by bit_count(xor).
+* LSH banding — MinHash, SimHash and embedding-cosine (``similarity.py``)
+  candidates all come from ``banded_pairs``: one self-join on (band, key)
+  that emits each pair once, from its lowest agreeing band, so candidate
+  generation is bounded by bucket sizes, not corpus size, and needs no
+  distinct.
 * shingle Jaccard — exact verification restricted to candidate pairs.
 """
 
@@ -185,6 +188,51 @@ def minhash_signatures(
     )
 
 
+def banded_pairs(
+    rows: DataFrame, id_col: str, band_keys: list[Column], carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """(a, b, c_a, c_b for c in ``carry``): every pair of ``rows`` (a < b)
+    whose keys agree in at least one band — the engine's one band self-join,
+    shared by MinHash, SimHash and embedding-cosine LSH.
+
+    ``band_keys[j]`` is band j's key expression over ``rows``. Each row keeps
+    its keys as one array, posexplodes it and self-joins on (band, key), so
+    candidate generation is bounded by bucket sizes, never all-pairs.
+
+    First-matching-band emission: a pair agreeing in k bands would leave the
+    join k times and need a ``distinct`` exchange to collapse them — on a
+    near-dup-dense corpus that exchange carried ~4× the result size (sf0.1
+    simhash: 3.3M result pairs, ~13M emitted). Instead the join requires
+    every LOWER band's keys to differ, read off the carried key arrays, so
+    each pair leaves exactly once, from its minimal agreeing band, and the
+    result set equals the band-join + distinct formulation by construction
+    (keys must be non-null, as every caller's are). The arrays are carried,
+    not recomputed, because a key may read columns (MinHash signatures) that
+    the join sides no longer hold."""
+    banded = rows.select(F.col(id_col), *carry, F.array(*band_keys).alias("_keys")).select(
+        "*", F.posexplode("_keys").alias("_band", "_key")
+    )
+
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            F.col(id_col).alias(s),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            F.col("_keys").alias(f"_keys_{s}"),
+            "_band",
+            "_key",
+        )
+
+    keep = F.col("a") < F.col("b")
+    for j in range(len(band_keys) - 1):
+        keep = keep & ((F.col("_band") <= F.lit(j)) | (F.col("_keys_a")[j] != F.col("_keys_b")[j]))
+    return (
+        side("a")
+        .join(side("b"), ["_band", "_key"])
+        .where(keep)
+        .select("a", "b", *[f"{c}_{s}" for s in "ab" for c in carry])
+    )
+
+
 def minhash_lsh_candidates(
     docs: DataFrame,
     num_hashes: int = 16,
@@ -197,7 +245,8 @@ def minhash_lsh_candidates(
 
     Band keys are projected straight off the wide signature row (md5 of the
     band's sigs in perm order) — no second aggregation shuffle; the only
-    shuffles are the signature groupBy and the bucket self-join. The wide
+    shuffles are the signature groupBy and the ``banded_pairs`` self-join,
+    which emits each pair once (no distinct). The wide
     signature table is materialized once (``_materialize``) so the
     shingle-explode + k-min aggregation — the dominant cost at corpus scale —
     is computed exactly once, not once per self-join side."""
@@ -205,30 +254,11 @@ def minhash_lsh_candidates(
     wide = _materialize(
         minhash_signatures_wide(docs, num_hashes, shingle_n, id_col, text_col)
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[F.col(f"s{band * rows_per_band + j}") for j in range(rows_per_band)]
-                    )
-                ).alias("band_key"),
-            )
-            for band in range(bands)
-        ]
-    )
-    band_keys = wide.select(id_col, F.explode(band_structs).alias("_bk")).select(
-        id_col, F.col("_bk.band").alias("band"), F.col("_bk.band_key").alias("band_key")
-    )
-    a = band_keys.select(F.col(id_col).alias("a"), "band", "band_key")
-    b = band_keys.select(F.col(id_col).alias("b"), "band", "band_key")
-    return (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+    keys = [
+        F.md5(F.concat_ws(",", *[F.col(f"s{band * rows_per_band + j}") for j in range(rows_per_band)]))
+        for band in range(bands)
+    ]
+    return banded_pairs(wide, id_col, keys)
 
 
 def shingle_sets(
@@ -376,55 +406,18 @@ def simhash_near_pairs(
     over ``bands`` bands ⇒ some band equal when bands > max_hamming), then
     exact Hamming verify via bit_count(xor).
 
-    The fingerprint table is materialized once (``_materialize``); all band
-    keys are projected off it in ONE explode (mirroring the MinHash
-    ``band_structs`` shape) — the token-explode + vote aggregation, the
-    dominant cost at corpus scale, is computed exactly once rather than once
-    per band side (8× in the pre-materialization plan).
-
-    First-matching-band emission (r6): a pair agreeing in k bands used to be
-    emitted k times and collapsed by a ``distinct`` — on a near-dup-dense
-    corpus that exchange carried ~4× the result size (sf0.1: 3.3M result
-    pairs, ~13M emitted). Every band key is a pure function of the
-    fingerprint (``(simhash >> j·band_bits) & mask``), so the join can
-    require all LOWER bands to differ — each pair then leaves the join
-    exactly once (from its minimal agreeing band) and the distinct exchange
-    disappears from the plan. Result set is identical by construction."""
+    The fingerprint table is materialized once (``_materialize``) and band j's
+    key is ``(simhash >> j·band_bits) & mask``; ``banded_pairs`` carries the
+    fingerprint to the verify and emits each pair once. The token-explode +
+    vote aggregation, the dominant cost at corpus scale, is computed exactly
+    once rather than once per band side (8× in the pre-materialization plan)."""
     fps = _materialize(simhash_fingerprints(docs, id_col, text_col, bits))
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
-
-    def band_key(fp: Column, j: int) -> Column:
-        return F.shiftright(fp, j * band_bits).bitwiseAND(F.lit(mask))
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                band_key(F.col("simhash"), band).alias("band_key"),
-            )
-            for band in range(bands)
-        ]
-    )
-    banded = fps.select(
-        F.col(id_col), F.col("simhash"), F.explode(band_structs).alias("_bk")
-    ).select(
-        id_col, "simhash", F.col("_bk.band").alias("band"), F.col("_bk.band_key").alias("band_key")
-    )
-    a = banded.select(F.col(id_col).alias("a"), F.col("simhash").alias("sh_a"), "band", "band_key")
-    b = banded.select(F.col(id_col).alias("b"), F.col("simhash").alias("sh_b"), "band", "band_key")
-    # emit from the minimal agreeing band only: for every lower band j the
-    # two fingerprints' band keys must DIFFER (cheap bit math the optimizer
-    # folds into the join condition) — pairs are unique without a distinct
-    first_band = F.lit(True)
-    for j in range(bands - 1):
-        first_band = first_band & (
-            (F.col("band") <= F.lit(j))
-            | (band_key(F.col("sh_a"), j) != band_key(F.col("sh_b"), j))
-        )
+    keys = [F.shiftright("simhash", j * band_bits).bitwiseAND(F.lit(mask)) for j in range(bands)]
     return (
-        a.join(b, ["band", "band_key"])
-        .where((F.col("a") < F.col("b")) & first_band)
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+        banded_pairs(fps, id_col, keys, carry=("simhash",))
+        .withColumn("hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
         .where(F.col("hamming") <= max_hamming)
         .select("a", "b", "hamming")
     )

@@ -255,15 +255,13 @@ def bench_mega_round(spark: SparkSession, pages_path: str, warehouse: str) -> di
     t0 = time.perf_counter()
     stats = run_round(spark, store, pages, cfg, 0, 0)
     wall = time.perf_counter() - t0
-    out = {
+    return {
         "frontier": n,
         "fetched": stats["fetched"],
         "wall_sec": round(wall, 2),
         "urls_per_sec": round(stats["fetched"] / wall, 1),
+        "stage_secs": stats["stage_secs"],
     }
-    if "stage_secs" in stats:
-        out["stage_secs"] = stats["stage_secs"]
-    return out
 
 
 def bench_parse_stage(spark: SparkSession, pages_path: str, sample_mod: int = 3) -> dict:

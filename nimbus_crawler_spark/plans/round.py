@@ -121,21 +121,19 @@ def run_round(
 ) -> dict:
     """Execute round ``r``; commits atomically; returns progress stats.
 
-    NIMBUS_ROUND_TIMING=1 adds ``stage_secs`` to the returned stats: wall
-    time between the round's materialization barriers (eager localCheckpoints
-    + the commit) — a driver-side stage profile with zero extra jobs."""
-    import os as _os
+    ``stage_secs`` in the returned stats is the wall time between the round's
+    materialization barriers (eager localCheckpoints + the commit), plus the
+    commit's own sub-steps under ``commit_sub`` — ``perf_counter`` ticks in
+    this process that start no Spark job."""
     import time as _time
 
-    _timing = _os.environ.get("NIMBUS_ROUND_TIMING", "0") == "1"
     stage_secs: dict = {}
     _tick_last = [_time.perf_counter()]
 
     def _tick(label: str) -> None:
-        if _timing:
-            now = _time.perf_counter()
-            stage_secs[label] = round(now - _tick_last[0], 2)
-            _tick_last[0] = now
+        now = _time.perf_counter()
+        stage_secs[label] = round(now - _tick_last[0], 2)
+        _tick_last[0] = now
 
     state = store.read("url_state")
     domains = store.read("domains")
@@ -628,11 +626,8 @@ def run_round(
         "scheduled": fm["scheduled"],
         "fetched": fm["fetched"],
         "fetched_total": fm["fetched_total"],
+        "stage_secs": {**stage_secs, "commit_sub": fm["commit_sub_secs"]},
     }
-    if _timing:
-        stats["stage_secs"] = stage_secs
-        if "commit_sub_secs" in fm:
-            stats["stage_secs"]["commit_sub"] = fm["commit_sub_secs"]
     if fm["scheduled"] == 0 and fm["frontier_pending_after"] > 0:
         # pure wait round (every pending URL is backing off): tell the loop
         # how far to fast-forward — rounds in (r, min_next) are provably

@@ -123,9 +123,6 @@ def main() -> None:
     wh = tempfile.mkdtemp(prefix=f"nimbus-scale-{cores}-", dir=base)
     shutil.rmtree(wh, ignore_errors=True)
     shutil.copytree(template, wh)
-    # stage profile rides every sample: driver-side perf_counter ticks around
-    # the round's existing materialization barriers — zero extra Spark jobs
-    os.environ.setdefault("NIMBUS_ROUND_TIMING", "1")
     steal0 = _steal_jiffies()
     r = bench_mega_round(spark, pages_path, wh)
     # hypervisor steal accumulated DURING the timed round — the evidence

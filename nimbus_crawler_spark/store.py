@@ -173,15 +173,13 @@ class SnapshotStore:
         this is how the engine derives its per-round counters without
         dedicated count() jobs.
         """
-        _timing = os.environ.get("NIMBUS_ROUND_TIMING", "0") == "1"
         _sub: dict[str, float] = {}
         _t0 = [time.perf_counter()]
 
         def _sub_tick(label: str) -> None:
-            if _timing:
-                now = time.perf_counter()
-                _sub[label] = round(now - _t0[0], 2)
-                _t0[0] = now
+            now = time.perf_counter()
+            _sub[label] = round(now - _t0[0], 2)
+            _t0[0] = now
 
         overlap = set(snapshots or {}) & set(merges or {})
         if overlap:
@@ -251,8 +249,7 @@ class SnapshotStore:
         # and the returned marker carry identical timing (the marker-file
         # write itself — a ~1 KB JSON — is the only untimed step)
         _sub_tick("stats")
-        if _timing:
-            final_meta["commit_sub_secs"] = _sub
+        final_meta["commit_sub_secs"] = _sub
         marker = {
             "round": round_idx,
             "tables": tables,

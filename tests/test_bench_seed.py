@@ -25,7 +25,16 @@ from nimbus_crawler_spark.store import SnapshotStore
 
 
 @pytest.fixture(scope="module")
-def seeded_pair(spark):
+def no_timing_switch():
+    """Stage timing needs no switch: the rounds below run with the old
+    ``NIMBUS_ROUND_TIMING`` variable unset."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.delenv("NIMBUS_ROUND_TIMING", raising=False)
+        yield
+
+
+@pytest.fixture(scope="module")
+def seeded_pair(spark, no_timing_switch):
     """Two warehouses over the same corpus: one domains-seeded (the bench
     template shape), one seeded with an EMPTY domains table (the discovery
     shape) — each run through one politeness-unbounded round."""
@@ -98,3 +107,16 @@ def test_seeded_round_takes_empty_probe_path(seeded_pair):
     assert all(
         r["first_seen_round"] == -1 for r in seeded_pair["seeded"]["domains"].values()
     )
+
+
+def test_stage_secs_always_reported(seeded_pair):
+    """The stage ticks are local perf_counter calls that start no Spark
+    job, so every round reports them: all six stages plus the
+    commit's sub-steps, read back from the commit marker."""
+    for mode in ("seeded", "plain"):
+        st = seeded_pair[mode]["stats"]["stage_secs"]
+        assert set(st) == {
+            "domains", "select", "fetch_parse", "rank_dedup", "children", "commit", "commit_sub"
+        }
+        assert set(st["commit_sub"]) == {"delta", "writes", "stats"}
+        assert all(v >= 0 for k, v in st.items() if k != "commit_sub")

@@ -1020,6 +1020,31 @@ class TestIndexing:
         with pytest.raises(ValueError):
             bm25_topk(docs, "   ")
 
+    _BM25_ROWS = [(0, "cat dog cat"), (1, "dog dog dog dog"), (2, "cat fish"), (3, "bird"), (4, "")]
+
+    def test_bm25_topk_string_ids(self, spark):
+        """The rank window's constant key must not read doc_id as a number:
+        string ids rank exactly like the same corpus with long ids."""
+        from nimbus_crawler_spark.operators.indexing import bm25_topk
+
+        longs = spark.createDataFrame(self._BM25_ROWS, "doc_id long, text string")
+        strs = spark.createDataFrame(
+            [(f"d{i}", t) for i, t in self._BM25_ROWS], "doc_id string, text string"
+        )
+        exp = [(f"d{i}", s, r) for i, s, r in bm25_topk(longs, "cat dog").collect()]
+        assert [tuple(r) for r in bm25_topk(strs, "cat dog").collect()] == exp
+
+    def test_bm25_topk_null_id_shares_the_window(self, spark):
+        """A null doc_id must rank in the same window as every other row,
+        not in a partition of its own (which gave a second rank 1)."""
+        from nimbus_crawler_spark.operators.indexing import bm25_topk
+
+        rows = [(None if i == 1 else i, t) for i, t in self._BM25_ROWS]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        got = bm25_topk(docs, "cat dog").collect()
+        assert [r["doc_id"] for r in got] == [0, None, 2]
+        assert [r["rank"] for r in got] == [1, 2, 3]
+
 
 class TestHistograms:
     """metric_histogram / quality_histogram (textstats): distribution
@@ -1463,45 +1488,104 @@ class TestR6OptimizationInternals:
         rows.append((n + 1, rows[1][1] + " w0"))
         return spark.createDataFrame(rows, "doc_id long, text string")
 
-    def test_simhash_first_band_equals_distinct_formulation(self, spark):
-        from pyspark.sql import functions as F
-
-        from nimbus_crawler_spark.operators.textdedup import (
-            _materialize,
-            simhash_fingerprints,
-            simhash_near_pairs,
+    @staticmethod
+    def _band_join_distinct(rows, id_col, band_keys, carry=()):
+        """The shape ``banded_pairs`` replaced: explode (band, key) structs,
+        self-join on them, keep a < b and collapse repeats with a distinct."""
+        structs = F.array(*[
+            F.struct(F.lit(j).alias("band"), k.alias("band_key")) for j, k in enumerate(band_keys)
+        ])
+        banded = rows.select(F.col(id_col), *carry, F.explode(structs).alias("_bk")).select(
+            id_col, *carry, F.col("_bk.band").alias("band"), F.col("_bk.band_key").alias("band_key")
         )
+
+        def side(s):
+            return banded.select(
+                F.col(id_col).alias(s), *[F.col(c).alias(f"{c}_{s}") for c in carry], "band", "band_key"
+            )
+
+        return (
+            side("a").join(side("b"), ["band", "band_key"]).where(F.col("a") < F.col("b"))
+            .select("a", "b", *[f"{c}_{s}" for s in "ab" for c in carry]).distinct()
+        )
+
+    def _minhash_case(self, spark):
+        from nimbus_crawler_spark.operators.textdedup import (
+            minhash_lsh_candidates,
+            minhash_signatures_wide,
+        )
+
+        # one signature per band: many pairs agree in several bands
+        docs = self._mk_docs(spark)
+        h, bands, n = 8, 8, 2
+        got = minhash_lsh_candidates(docs, num_hashes=h, bands=bands, shingle_n=n)
+        keys = [F.md5(F.concat_ws(",", F.col(f"s{j}"))) for j in range(bands)]
+        ref = self._band_join_distinct(minhash_signatures_wide(docs, h, n), "doc_id", keys)
+        return got, ref
+
+    def _simhash_case(self, spark):
+        from nimbus_crawler_spark.operators.textdedup import simhash_fingerprints, simhash_near_pairs
 
         docs = self._mk_docs(spark)
         bits, bands, mh = 16, 4, 3
-        got_rows = simhash_near_pairs(docs, max_hamming=mh, bits=bits, bands=bands).collect()
-        got = [(r["a"], r["b"], r["hamming"]) for r in got_rows]
-        # no pair may be emitted twice (uniqueness replaced the distinct)
-        assert len(got) == len(set(got))
-
-        # reference: the pre-r6 shape — band join, distinct, hamming filter
-        fps = _materialize(simhash_fingerprints(docs, bits=bits))
-        band_bits = bits // bands
-        mask = (1 << band_bits) - 1
-        bstructs = F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("simhash"), b * band_bits).bitwiseAND(F.lit(mask)).alias("band_key"),
-            )
-            for b in range(bands)
-        ])
-        banded = fps.select("doc_id", "simhash", F.explode(bstructs).alias("_bk")).select(
-            "doc_id", "simhash", F.col("_bk.band").alias("band"), F.col("_bk.band_key").alias("band_key")
-        )
-        a = banded.select(F.col("doc_id").alias("a"), F.col("simhash").alias("sh_a"), "band", "band_key")
-        b = banded.select(F.col("doc_id").alias("b"), F.col("simhash").alias("sh_b"), "band", "band_key")
+        got = simhash_near_pairs(docs, max_hamming=mh, bits=bits, bands=bands)
+        band_bits, mask = bits // bands, (1 << (bits // bands)) - 1
+        keys = [F.shiftright("simhash", j * band_bits).bitwiseAND(F.lit(mask)) for j in range(bands)]
         ref = (
-            a.join(b, ["band", "band_key"]).where(F.col("a") < F.col("b"))
-            .select("a", "b", "sh_a", "sh_b").distinct()
-            .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-            .where(F.col("hamming") <= mh).select("a", "b", "hamming").collect()
+            self._band_join_distinct(simhash_fingerprints(docs, bits=bits), "doc_id", keys, ("simhash",))
+            .withColumn("hamming", F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))))
+            .where(F.col("hamming") <= mh).select("a", "b", "hamming")
         )
-        assert set(got) == {(r["a"], r["b"], r["hamming"]) for r in ref}
+        return got, ref
+
+    def _embedding_case(self, spark):
+        import random
+
+        from nimbus_crawler_spark.operators.similarity import (
+            cosine,
+            embedding_cosine_pairs,
+            sign_bucket,
+        )
+
+        rng = random.Random(7)
+        vecs = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(40)]
+        emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
+        bits, bands, thr = 2, 4, 0.1
+        got = embedding_cosine_pairs(emb, threshold=thr, bits=bits, bands=bands)
+        keys = [sign_bucket(F.col("embedding"), bits, offset=j * bits) for j in range(bands)]
+        ref = (
+            self._band_join_distinct(emb, "vec_id", keys, ("embedding",))
+            .withColumn("cosine", F.round(cosine(F.col("embedding_a"), F.col("embedding_b")), 6))
+            .where(F.col("cosine") >= thr).select("a", "b", "cosine")
+        )
+        return got, ref
+
+    @pytest.mark.parametrize("op", ["minhash", "simhash", "embedding"])
+    def test_simhash_first_band_equals_distinct_formulation(self, spark, op):
+        """``banded_pairs`` emits each pair from its lowest agreeing band
+        only; for each of its three callers the result must equal the
+        band-join + distinct formulation, with no pair emitted twice."""
+        got_df, ref_df = getattr(self, f"_{op}_case")(spark)
+        got = [tuple(r) for r in got_df.collect()]
+        assert len(got) == len(set(got))
+        assert got and set(got) == {tuple(r) for r in ref_df.collect()}
+
+    @pytest.mark.parametrize("op", ["minhash", "embedding"])
+    def test_banded_pairs_plan_has_no_pair_aggregate(self, spark, op):
+        """Plan-shape pin: uniqueness comes from the lower-band test inside
+        the join, so no aggregate keyed on (a, b) — the old distinct — may
+        appear in the physical plan."""
+        import io
+        import re
+        from contextlib import redirect_stdout
+
+        got_df, _ = getattr(self, f"_{op}_case")(spark)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            got_df.explain()
+        plan = buf.getvalue()
+        assert "Join" in plan
+        assert not re.search(r"Aggregate\(keys=\[a#\d+L?, b#\d+L?\]", plan), plan
 
     def test_ngram_prune_drops_nothing(self, spark):
         from pyspark.sql import functions as F

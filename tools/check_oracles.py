@@ -3,6 +3,7 @@ on Spark and its oracle_sql() on DuckDB at the same sf, compare row count,
 column names, and order-insensitive values.
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+(``check`` is the same comparison on a caller's session, for tests.)
 """
 
 from __future__ import annotations
@@ -39,13 +40,22 @@ def normalize(rows, cols):
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
 
-    import __spark_entry__ as entrymod
     from nimbus_crawler_spark.session import build_session
 
     spark = build_session(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
+    failures = check(spark, sf_dir, sys.argv[2:])
+    spark.stop()
+    return 1 if failures else 0
 
+
+def check(spark, sf_dir: str, names=()) -> list[tuple[str, str]]:
+    """Run each named ``queries()`` entry (all when ``names`` is empty) on
+    ``spark`` and its oracle on DuckDB over ``sf_dir``; print one line per
+    query and return the (name, problem) failures."""
+    import __spark_entry__ as entrymod
+
+    only = set(names)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -94,8 +104,7 @@ def main() -> int:
             print(f"[ok] {name}: {len(srows)} rows")
 
     print(f"\n{len(failures)} failures of {len(qs) if not only else len(only)}")
-    spark.stop()
-    return 1 if failures else 0
+    return failures
 
 
 if __name__ == "__main__":
